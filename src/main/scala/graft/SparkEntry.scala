@@ -2142,6 +2142,16 @@ object SparkEntry {
   /** Centroids stashed by the q_label_audit run — same contract. */
   @volatile private var labelAuditStash: Option[Array[Array[Double]]] = None
 
+  /** The queries whose oracle replays a learned artifact stashed above:
+    * each enters [[oracleSql]] only after its own query ran. Verify
+    * builds the ones a subset run skips, so the dumped oracle map is
+    * always complete.
+    */
+  val learnedOracleQueries: Set[String] = Set(
+    "q_pq_topk", "q_pq_codes", "q_pq_delete", "q_pq_retrain", "q_semdedup",
+    "q_quality_classifier", "q_mutual_knn", "q_cell_stats", "q_cell_outliers",
+    "q_hard_negatives", "q_cell_purity", "q_label_audit")
+
   /** Shortest round-trip double literal — DuckDB parses Java's toString
     * form (incl. scientific notation) back to the identical IEEE bits.
     */

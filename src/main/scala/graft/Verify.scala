@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,14 +6,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(
+      master = s"local[$cpus]", shufflePartitions = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // local iteration aid: GRAFT_ONLY=q_a,q_b runs a subset (driver unset)
@@ -28,15 +21,13 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // The learned-artifact oracles (PQ codebooks, semdedup centroids,
-    // classifier weights) exist only after their query lambda runs — a
-    // GRAFT_ONLY subset that skips them would silently drop those entries
-    // from oracle_sql.json, shrinking the gate's denominator over stale
-    // outputs. Build (not write) the skipped stash queries so the dumped
-    // oracle map is always complete.
-    val stashQueries = Seq("q_pq_topk", "q_semdedup", "q_quality_classifier")
+    // The learned-artifact oracles exist only after their query lambda
+    // runs — a GRAFT_ONLY subset that skips them would silently drop
+    // those entries from oracle_sql.json, shrinking the gate's
+    // denominator over stale outputs. Build (not write) the skipped ones
+    // so the dumped oracle map is always complete.
     only.foreach { o =>
-      stashQueries.filterNot(o.contains).foreach { name =>
+      SparkEntry.learnedOracleQueries.filterNot(o.contains).toSeq.sorted.foreach { name =>
         try SparkEntry.queries(name)(spark, sfDir)
         catch { case e: Throwable =>
           System.err.println(s"[verify] stash build $name failed: ${e.getMessage}")

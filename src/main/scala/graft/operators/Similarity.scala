@@ -1555,6 +1555,16 @@ object Similarity {
 
   // ------------------------------------------------- index persistence
 
+  /** Parquet schema of the driver-side centroid/codebook coordinate
+    * dumps: (index columns, coordinate) — see [[saveIvfIndex]] /
+    * [[savePqBooks]]. DOUBLE round-trips raw IEEE-754 bits, the same
+    * bit-exactness contract the Spark-written form carried.
+    */
+  private def coordSchema(idx: String*): org.apache.parquet.schema.MessageType =
+    org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      idx.map(c => s"required int32 $c;")
+        .mkString("message graft_coords { ", " ", " required double c; }"))
+
   /** Persist a trained IVF index as parquet tables so it outlives the
     * session: `<dir>/centroids` holds one (cell, dim, c) row per
     * coordinate and `<dir>/cell_stats` the mergeable [[cellStats]]
@@ -1566,16 +1576,6 @@ object Similarity {
     * of retraining per session. Both tables are metadata-sized
     * (cells × dim rows), written as one file each.
     */
-  /** Parquet schema of the driver-side centroid/codebook coordinate
-    * dumps: (index columns, coordinate) — see [[saveIvfIndex]] /
-    * [[savePqBooks]]. DOUBLE round-trips raw IEEE-754 bits, the same
-    * bit-exactness contract the Spark-written form carried.
-    */
-  private def coordSchema(idx: String*): org.apache.parquet.schema.MessageType =
-    org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      idx.map(c => s"required int32 $c;")
-        .mkString("message graft_coords { ", " ", " required double c; }"))
-
   def saveIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
@@ -1707,14 +1707,14 @@ object Similarity {
   private def readStoreMeta(
       spark: org.apache.spark.sql.SparkSession,
       path: String, what: String): (Long, Int) = {
+    def noStamp(cause: Throwable) = new IllegalStateException(
+      s"$what has no quantizer stamp at $path — rebuild the store " +
+        "with its save* function before serving or appending", cause)
     val rows =
       try graft.store.TinyParquet.readGroups(spark, path)
-      catch {
-        case e: java.io.FileNotFoundException =>
-          throw new IllegalStateException(
-            s"$what has no quantizer stamp at $path — rebuild the store " +
-              "with its save* function before serving or appending", e)
-      }
+      catch { case e: java.io.FileNotFoundException => throw noStamp(e) }
+    // a 0-row meta (a crash before the stamp committed) is a missing one
+    if (rows.isEmpty) throw noStamp(null)
     require(rows.length == 1, s"torn store meta at $path: ${rows.length} rows")
     (graft.store.TinyParquet.long(rows.head, "qfp"),
       graft.store.TinyParquet.long(rows.head, "cell_bits").toInt)

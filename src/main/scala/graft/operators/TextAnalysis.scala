@@ -981,66 +981,6 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("tf"), sort_array(collect_list(col("pos"))).as("ps"))
 
-  /** Persist the positional postings as `<dir>/postings_pos` in the same
-    * tok-bucketed layout as [[saveBm25Index]] (plus the shared
-    * `<dir>/doclen`), so phrase serves prune exactly like term serves.
-    */
-  def saveBm25Positional(
-      spark: org.apache.spark.sql.SparkSession, dir: String, docs: DataFrame): Unit = {
-    // the saveBm25Index layout rules carry over: dl denormalized onto
-    // every posting row, 1-row stats sidecar, doclen as source of truth;
-    // the two output chains overlap as in saveBm25Index (guide §2.6) and
-    // the stats row folds from the just-written doclen file, pin-free
-    Par.run(
-      () => bucketedPostingsOnePass(docs, positional = true)
-        .write.mode("overwrite")
-        .partitionBy("tok_bucket").parquet(s"$dir/postings_pos"),
-      () => {
-        docLengthsPlan(docs).write.mode("overwrite").parquet(s"$dir/doclen")
-        val (nDocs, aTokens) = corpusStatsPair(
-          spark.read.schema(doclenSchema).parquet(s"$dir/doclen"))
-        writeStatsRow(spark, s"$dir/stats", nDocs, aTokens, accrete = false)
-      })
-  }
-
-  /** The store layout contract as an explicit read schema — the postings
-    * column set is FIXED by [[bucketedPostingsOnePass]], so a load never
-    * needs the per-invocation schema-inference footer job (the catalog-
-    * supplied-schema analogue, same rationale as the Tables cache; the
-    * round-trip specs pin supplied == inferred, so layout drift fails
-    * loudly there, not silently here). Feature detection for pre-dl /
-    * pre-bucket legacy stores stays: a driver-side footer field check and
-    * an fs partition-dir check pick the legacy column set, preserving the
-    * loud rebuild errors and the serve fallbacks those layouts route to.
-    */
-  private def storedPostingsSchema(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      positional: Boolean): org.apache.spark.sql.types.StructType = {
-    val base = "doc_id BIGINT, tok STRING, tf BIGINT" +
-      (if (positional) ", ps ARRAY<INT>" else "")
-    val dl =
-      if (graft.store.TinyParquet.schemaHasField(spark, path, "dl")) ", dl BIGINT"
-      else ""
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tb =
-      if (fs.listStatus(p).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("tok_bucket=")))
-        ", tok_bucket INT"
-      else ""
-    org.apache.spark.sql.types.StructType.fromDDL(base + dl + tb)
-  }
-
-  private val doclenSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, dl BIGINT")
-
-  /** Reload a [[saveBm25Positional]] store: (postings_pos, doclen). */
-  def loadBm25Positional(
-      spark: org.apache.spark.sql.SparkSession, dir: String): (DataFrame, DataFrame) =
-    (spark.read.schema(storedPostingsSchema(spark, s"$dir/postings_pos",
-        positional = true)).parquet(s"$dir/postings_pos"),
-      spark.read.schema(doclenSchema).parquet(s"$dir/doclen"))
-
   /** [[phraseTopK]] served from a stored positional index — identical
     * phrase occurrences and ranking by construction (same positions,
     * same integer weights); the phrase's term buckets prune the store
@@ -1052,25 +992,14 @@ object TextAnalysis {
       stats: Option[DataFrame] = None): DataFrame = {
     require(phrase.size >= 2, "a phrase needs at least two terms")
     require(k > 0, "k must be positive")
-    val terms = phrase.distinct
-    val hasDl = postingsPos.columns.contains("dl")
     // same pin discipline as bm25PerQueryFromIndex: doclen materializes
     // only when the serve will read it
-    val needDl = !hasDl || stats.isEmpty
-    val dl = if (needDl) Pins.pin(doclen.select(col("doc_id"), col("dl")))
+    val dl = if (stats.isEmpty) Pins.pin(doclen.select(col("doc_id"), col("dl")))
       else doclen
-    val cols = Seq(col("doc_id"), col("tok"), col("tf"), col("ps")) ++
-      (if (hasDl) Seq(col("dl")) else Nil)
     val post = Pins.pin(
-      if (postingsPos.columns.contains("tok_bucket")) {
-        val buckets = terms.map(t => h60Jvm(t) % Bm25Buckets).distinct
-        postingsPos
-          .filter(col("tok_bucket").isin(buckets: _*) &&
-            col("tok").isin(terms: _*))
-          .select(cols: _*)
-      } else postingsPos.filter(col("tok").isin(terms: _*)).select(cols: _*))
+      probeTerms(postingsPos, phrase.distinct, "doc_id", "tok", "tf", "ps", "dl"))
     val out = scorePhrase(post, dl, phrase, k, stats)
-    if (needDl) Pins.release(dl)
+    if (stats.isEmpty) Pins.release(dl)
     Pins.release(post)
     out
   }
@@ -1439,43 +1368,111 @@ object TextAnalysis {
       .sortWithinPartitions(col("tok_bucket"), col("tok"))
   }
 
+  /** One BM25 postings kind. The tf store (`<dir>/postings`) and the
+    * positional phrase store (`<dir>/postings_pos`, which adds the
+    * sorted in-document positions `ps`) share every lifecycle step:
+    * layout, doclen and stats halves, version-swap delete. They differ
+    * only in these fields: the directory name, the `ps` column, the save
+    * function a refused append names, and the `store` label of the
+    * delete audit.
+    *
+    * The stored layout is the only one a store has: `dl` on every
+    * posting row, PARTITIONED BY `tok_bucket`, tok-sorted files. So the
+    * read schema is one constant per kind, and no load pays a
+    * schema-inference job or probes for another layout. A store in any
+    * other layout is rebuilt, never served.
+    */
+  private final case class PostingsKind(
+      dirName: String, positional: Boolean, rebuildHint: String, auditStore: String) {
+    val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id BIGINT, tok STRING, tf BIGINT" +
+          (if (positional) ", ps ARRAY<INT>" else "") + ", dl BIGINT, tok_bucket INT")
+  }
+
+  private val TfPostings =
+    PostingsKind("postings", positional = false, "saveBm25Index", "bm25")
+  private val PosPostings =
+    PostingsKind("postings_pos", positional = true, "saveBm25Positional", "bm25_pos")
+
+  private val doclenSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, dl BIGINT")
+
   /** Persist [[buildBm25Index]] as `<dir>/postings` + `<dir>/doclen` +
     * `<dir>/stats` parquet (BIGINT/VARCHAR only — trivially
     * engine-portable): postings PARTITIONED BY `tok_bucket` with
     * tok-sorted files (the [[Bm25Buckets]] pruning layout) and — the
     * Lucene norms trick — each posting row DENORMALIZED with its
-    * document's `dl`, paid by one build-time join so the serve never
-    * joins the corpus-sized doclen table per query; `stats` is the
-    * 1-row (n_docs, a_tokens) corpus sidecar, mergeable at append
-    * (counts add) and rewritten at delete, so the serve reads corpus
-    * statistics from one row instead of re-aggregating doclen per
-    * request. doclen itself persists unpartitioned — it is the
-    * deletion/stats source of truth (zero-token documents live only
-    * there) — but a stats-equipped serve never scans it. At scale the
-    * postings table is the corpus-sized artifact; writing it once per
-    * corpus version is the standard inverted-index trade. The `spark`
-    * parameter is kept only for API symmetry with [[loadBm25Index]]
-    * (both writes go through the DataFrame API).
+    * document's `dl`, so the serve never joins the corpus-sized doclen
+    * table per query; `stats` is the 1-row (n_docs, a_tokens) corpus
+    * sidecar, mergeable at append (counts add) and rewritten at delete,
+    * so the serve reads corpus statistics from one row instead of
+    * re-aggregating doclen per request. doclen itself persists
+    * unpartitioned — it is the deletion/stats source of truth
+    * (zero-token documents live only there) — but a stats-equipped
+    * serve never scans it. At scale the postings table is the
+    * corpus-sized artifact; writing it once per corpus version is the
+    * standard inverted-index trade.
     */
   def saveBm25Index(
-      spark: org.apache.spark.sql.SparkSession, dir: String, docs: DataFrame): Unit = {
-    // one-shuffle postings build (dl denormalized inline, no doc_id join,
-    // no separate write repartition) — see bucketedPostingsOnePass. The
-    // postings write and the doclen→stats chain are independent (each
-    // tokenizes its own pass), so they overlap (guide §2.6) — the
-    // doclen/stats jobs back-fill the postings write's task tail. The
-    // stats row folds from the just-written doclen file (narrow read,
-    // correct by construction), so nothing needs a pin.
+      spark: org.apache.spark.sql.SparkSession, dir: String, docs: DataFrame): Unit =
+    writeBatch(spark, dir, docs, TfPostings, append = false)
+
+  /** Persist [[buildBm25Positional]] as `<dir>/postings_pos` in the
+    * [[saveBm25Index]] layout (plus the shared `<dir>/doclen` and
+    * `<dir>/stats`), so phrase serves prune exactly like term serves.
+    */
+  def saveBm25Positional(
+      spark: org.apache.spark.sql.SparkSession, dir: String, docs: DataFrame): Unit =
+    writeBatch(spark, dir, docs, PosPostings, append = false)
+
+  /** The save (`append = false`: overwrite) and append bodies of both
+    * kinds. One-shuffle postings build (dl denormalized inline, no
+    * doc_id join, no separate write repartition) — see
+    * bucketedPostingsOnePass. The postings write and the doclen → stats
+    * chain are independent (each tokenizes its own pass), so they
+    * overlap (guide §2.6): the doclen/stats jobs back-fill the postings
+    * write's task tail.
+    */
+  private def writeBatch(
+      spark: org.apache.spark.sql.SparkSession, dir: String, docs: DataFrame,
+      kind: PostingsKind, append: Boolean): Unit = {
+    val postingsDir = s"$dir/${kind.dirName}"
+    // checked BEFORE any write, so a refused append leaves the store
+    // untouched; an empty store bootstraps its sidecar with this batch
+    if (append) require(
+      !hasFiles(spark, postingsDir) || loadBm25Stats(spark, dir).isDefined,
+      s"store at $dir has ${kind.dirName} but no stats sidecar — rebuild it " +
+        s"with ${kind.rebuildHint} before appending")
+    val mode = if (append) "append" else "overwrite"
+    val dl = docLengthsPlan(docs)
     Par.run(
-      () => bucketedPostingsOnePass(docs, positional = false)
-        .write.mode("overwrite")
-        .partitionBy("tok_bucket").parquet(s"$dir/postings"),
-      () => {
-        docLengthsPlan(docs).write.mode("overwrite").parquet(s"$dir/doclen")
-        val (nDocs, aTokens) = corpusStatsPair(
-          spark.read.schema(doclenSchema).parquet(s"$dir/doclen"))
-        writeStatsRow(spark, s"$dir/stats", nDocs, aTokens, accrete = false)
-      })
+      () => bucketedPostingsOnePass(docs, kind.positional)
+        .write.mode(mode).partitionBy("tok_bucket").parquet(postingsDir),
+      () => writeDoclenAndStats(spark, dir, dl, append))
+  }
+
+  /** Write a version's doclen half, then its stats row. A save or delete
+    * folds the row from the doclen file it just wrote (narrow read,
+    * correct by construction). An append recomputes the batch's narrow
+    * dl plan instead, because the accreted doclen dir can't isolate the
+    * batch; tokenize is deterministic, so on a deterministic batch the
+    * recompute equals the rows just written. Nothing needs a pin.
+    */
+  private def writeDoclenAndStats(
+      spark: org.apache.spark.sql.SparkSession, dir: String, dl: DataFrame,
+      append: Boolean): Unit = {
+    dl.write.mode(if (append) "append" else "overwrite").parquet(s"$dir/doclen")
+    val (nDocs, aTokens) = corpusStatsPair(
+      if (append) dl else spark.read.schema(doclenSchema).parquet(s"$dir/doclen"))
+    writeStatsRow(spark, s"$dir/stats", nDocs, aTokens, accrete = append)
+  }
+
+  /** Whether `path` holds anything but `_`-prefixed markers. */
+  private def hasFiles(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists(!_.getPath.getName.startsWith("_"))
   }
 
   /** The 1-row (n_docs, a_tokens) corpus-statistics frame the BM25
@@ -1542,8 +1539,9 @@ object TextAnalysis {
       coalesce(sum(col("a_tokens")), lit(0L)).as("a_tokens"))
 
   /** The stored corpus-stats sidecar of a [[saveBm25Index]]/
-    * [[saveBm25Positional]] store, or None for a store written before
-    * the sidecar existed (serves then fall back to aggregating doclen).
+    * [[saveBm25Positional]] store, or None when the sidecar is torn or
+    * empty (serves then fall back to aggregating doclen). Every writer
+    * writes the sidecar, so None never means an older layout.
     *
     * The sidecar is an APPEND-ONLY table of per-batch (n_docs, a_tokens)
     * rows — the house mergeable-state shape: the one-shot build writes
@@ -1554,7 +1552,7 @@ object TextAnalysis {
     * the postings and doclen halves), and the summed load is the same
     * grouping-free scalar aggregate the plan audit admits.
     *
-    * Torn-sidecar guard: a stats directory that exists but sums to
+    * Torn-sidecar guard: a missing stats directory or one that sums to
     * n_docs = 0 (a crash before the first row committed, or an empty
     * corpus) returns None — the serve then falls back to the doclen
     * aggregation instead of silently scoring with zeroed corpus
@@ -1642,136 +1640,73 @@ object TextAnalysis {
   /** Per-micro-batch maintenance of a [[saveBm25Index]] store — the
     * streaming twin of the one-shot build, in the house foreachBatch
     * shape (boilerplate-df / corpus-card / HLL maintenance): each batch's
-    * postings and doc-length rows APPEND to the stored parquet tables.
-    * Because every document lives in exactly one batch, each (doc_id,
-    * tok) posting and (doc_id, dl) row exists exactly once across
-    * appends — the accreted files ARE the union-merged state, no
+    * postings and doc-length rows APPEND to the stored parquet tables,
+    * and one stats row per batch appends to the sidecar
+    * ([[loadBm25Stats]] sums them; no file a live reader holds is ever
+    * overwritten). Because every document lives in exactly one batch,
+    * each (doc_id, tok) posting and (doc_id, dl) row exists exactly once
+    * across appends — the accreted files ARE the union-merged state, no
     * compaction read-modify-write — so serving [[bm25TopKFromIndex]]
     * from the store is identical to one-shot indexing of every document
     * seen (StreamingOpsSpec asserts the equality per batch).
     *
     * Contract: batches are DISJOINT document sets (the append-only-crawl
-    * shape, same contract the TextOpsSpec union-merge case proves); a
-    * REPLAYED batch would double-count its documents' tf and dl — run
-    * under foreachBatch with batch-id idempotence (write each batch to a
-    * `v<id>` path and skip existing, as the maintenance specs do) or
-    * dedup redeliveries upstream for at-least-once sources.
+    * shape); a REPLAYED batch would double-count its documents' tf and
+    * dl — run under foreachBatch with batch-id idempotence (write each
+    * batch to a `v<id>` path and skip existing, as the maintenance specs
+    * do) or dedup redeliveries upstream for at-least-once sources.
+    *
+    * Batches must also be DETERMINISTIC: the stats row comes from a
+    * recompute of the batch, not from the doclen rows the append wrote,
+    * so a batch whose rows change between evaluations (a `rand()`
+    * filter, an unordered `limit`, a non-replayable source) can leave
+    * the sidecar disagreeing with doclen. Persist such a batch before
+    * appending; [[verifyBm25Stats]] flags a store where this happened.
+    *
+    * A non-empty store without a stats sidecar refuses the append before
+    * any write. Crash analysis: the postings append overlaps the
+    * doclen → stats chain, and whichever writes land, every torn
+    * combination leaves some PAIR of the three tables inconsistent, so
+    * [[verifyBm25Stats]] catches every crash state.
     */
   def appendBm25Index(
-      spark: org.apache.spark.sql.SparkSession, dir: String, batch: DataFrame): Unit = {
-    val hasData = requireBucketedLayout(spark, s"$dir/postings")
-    if (hasData) {
-      // both legacy-layout checks fire BEFORE any write, so a refused
-      // append leaves the store untouched; the dl check is a footer-only
-      // driver read (TinyParquet) — the full schema-inference job it
-      // replaces was one of the per-append chain-latency costs
-      require(graft.store.TinyParquet.schemaHasField(spark, s"$dir/postings", "dl"),
-        s"postings store at $dir lacks the denormalized dl column — " +
-          "rebuild it with saveBm25Index before appending (mixed row " +
-          "schemas would corrupt the serve)")
-      require(loadBm25Stats(spark, dir).isDefined,
-        s"store at $dir has postings but no stats sidecar — rebuild it " +
-          "with saveBm25Index before appending")
-    }
-    val dl = docLengthsPlan(batch)
-    // one appended stats row per batch; loadBm25Stats sums them
-    // (mergeable state — no file a live reader holds is ever
-    // overwritten). The postings append overlaps the doclen → stats
-    // chain (guide §2.6). The stats pair folds from a RECOMPUTE of the
-    // narrow dl plan (tokenize is deterministic, so it equals the rows
-    // just written; the accreted doclen dir can't isolate this batch),
-    // which benched at parity with the localCheckpoint pin it replaces
-    // minus the pin job. Crash analysis: whichever writes land, every
-    // torn combination leaves some PAIR of the three tables
-    // inconsistent — stats behind/ahead of doclen fails the
-    // sidecar ↔ doclen reconciliation, and postings behind/ahead of
-    // doclen fails the postings ↔ doclen one — so [[verifyBm25Stats]]
-    // catches every crash state, exactly as it did under the strictly
-    // ordered write chain.
-    Par.run(
-      () => bucketedPostingsOnePass(batch, positional = false)
-        .write.mode("append")
-        .partitionBy("tok_bucket").parquet(s"$dir/postings"),
-      () => {
-        dl.write.mode("append").parquet(s"$dir/doclen")
-        val (nDocs, aTokens) = corpusStatsPair(dl)
-        writeStatsRow(spark, s"$dir/stats", nDocs, aTokens, accrete = true)
-      })
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String, batch: DataFrame): Unit =
+    writeBatch(spark, dir, batch, TfPostings, append = true)
 
   /** [[appendBm25Index]] for the POSITIONAL phrase store — the accretion
     * path that lets a crawl keep the phrase index current per
     * micro-batch instead of rebuilding it per corpus version. Positions
     * are per-document state, so disjoint batches' positional postings
-    * union-merge exactly like the plain tf postings (each (doc_id, tok)
-    * row with its sorted in-document positions exists once across
-    * appends); doclen and the (n_docs, a_tokens) stats sidecar accrete
-    * identically to [[appendBm25Index]], and the same disjoint-batch /
-    * batch-id-idempotence contract applies. Serving
-    * [[phraseTopKFromIndex]] from the accreted store ≡ one-shot
-    * [[saveBm25Positional]] of every document seen (spec-proven).
+    * union-merge exactly like the plain tf postings; doclen and the
+    * stats sidecar accrete identically, and the same disjoint-batch,
+    * batch-id-idempotence and DETERMINISTIC-batch contract applies (the
+    * stats row is a recompute of the batch — persist a non-deterministic
+    * batch first). Serving [[phraseTopKFromIndex]] from the accreted
+    * store ≡ one-shot [[saveBm25Positional]] of every document seen
+    * (spec-proven).
     */
   def appendBm25Positional(
-      spark: org.apache.spark.sql.SparkSession, dir: String, batch: DataFrame): Unit = {
-    val hasData = requireBucketedLayout(spark, s"$dir/postings_pos",
-      rebuildHint = "saveBm25Positional")
-    if (hasData) {
-      // footer-only dl gate, as in appendBm25Index
-      require(graft.store.TinyParquet.schemaHasField(spark, s"$dir/postings_pos", "dl"),
-        s"positional store at $dir lacks the denormalized dl column — " +
-          "rebuild it with saveBm25Positional before appending (mixed row " +
-          "schemas would corrupt the serve)")
-      require(loadBm25Stats(spark, dir).isDefined,
-        s"store at $dir has positional postings but no stats sidecar — " +
-          "rebuild it with saveBm25Positional before appending")
-    }
-    val dl = docLengthsPlan(batch)
-    // overlapped append chains, same crash analysis and pin-free
-    // stats-recompute rationale as [[appendBm25Index]]
-    Par.run(
-      () => bucketedPostingsOnePass(batch, positional = true)
-        .write.mode("append").partitionBy("tok_bucket")
-        .parquet(s"$dir/postings_pos"),
-      () => {
-        dl.write.mode("append").parquet(s"$dir/doclen")
-        val (nDocs, aTokens) = corpusStatsPair(dl)
-        writeStatsRow(spark, s"$dir/stats", nDocs, aTokens, accrete = true)
-      })
-  }
-
-  /** Layout guard for [[appendBm25Index]]: appending `tok_bucket=`-
-    * partitioned files onto a store written under the pre-bucketed flat
-    * layout yields a mixed directory Spark's partition discovery rejects
-    * (or silently misreads as a partial partition column) — fail loudly
-    * with a rebuild message instead. A nonexistent path is fine (first
-    * append creates the store); an existing path must already contain
-    * `tok_bucket=*` directories. Returns whether the store already has
-    * data (the stats-sidecar bootstrap signal).
-    */
-  private def requireBucketedLayout(
-      spark: org.apache.spark.sql.SparkSession, postingsPath: String,
-      rebuildHint: String = "saveBm25Index"): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(postingsPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) false
-    else {
-      val hasData = fs.listStatus(p).exists(s =>
-        !s.getPath.getName.startsWith("_"))
-      val bucketed = fs.listStatus(p).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith("tok_bucket="))
-      require(!hasData || bucketed,
-        s"postings store at $postingsPath uses the pre-bucketed flat layout — " +
-          s"rebuild it with $rebuildHint before appending (mixed layouts break " +
-          "partition discovery)")
-      hasData
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String, batch: DataFrame): Unit =
+    writeBatch(spark, dir, batch, PosPostings, append = true)
 
   /** Reload a [[saveBm25Index]] store: (postings, doclen). */
   def loadBm25Index(
       spark: org.apache.spark.sql.SparkSession, dir: String): (DataFrame, DataFrame) =
-    (spark.read.schema(storedPostingsSchema(spark, s"$dir/postings",
-        positional = false)).parquet(s"$dir/postings"),
+    loadStore(spark, dir, TfPostings)
+
+  /** Reload a [[saveBm25Positional]] store: (postings_pos, doclen). */
+  def loadBm25Positional(
+      spark: org.apache.spark.sql.SparkSession, dir: String): (DataFrame, DataFrame) =
+    loadStore(spark, dir, PosPostings)
+
+  /** Both halves under their constant read schemas (no inference job;
+    * the round-trip specs pin supplied == inferred, so layout drift
+    * fails loudly there).
+    */
+  private def loadStore(
+      spark: org.apache.spark.sql.SparkSession, dir: String,
+      kind: PostingsKind): (DataFrame, DataFrame) =
+    (spark.read.schema(kind.schema).parquet(s"$dir/${kind.dirName}"),
       spark.read.schema(doclenSchema).parquet(s"$dir/doclen"))
 
   /** Data-subject deletion THROUGH the postings store — the composition
@@ -1798,94 +1733,54 @@ object TextAnalysis {
       spark: org.apache.spark.sql.SparkSession,
       inDir: String,
       outDir: String,
-      pred: Column): DataFrame = {
+      pred: Column): DataFrame =
+    deleteFromStore(spark, inDir, outDir, pred, TfPostings)
+
+  /** [[deleteFromBm25Index]] for the POSITIONAL phrase store: documents
+    * matching `pred` leave both the positional postings and the shared
+    * doclen table, with the same version-swap rule and tombstone audit.
+    * Positions are per-document state and df/N/avg-dl re-derive at serve
+    * time, so phrase serving the survivor store ≡ serving a from-scratch
+    * positional index of the surviving corpus (oracle-proven hash-exact
+    * in q_phrase_delete).
+    */
+  def deleteFromBm25Positional(
+      spark: org.apache.spark.sql.SparkSession,
+      inDir: String,
+      outDir: String,
+      pred: Column): DataFrame =
+    deleteFromStore(spark, inDir, outDir, pred, PosPostings)
+
+  private def deleteFromStore(
+      spark: org.apache.spark.sql.SparkSession, inDir: String, outDir: String,
+      pred: Column, kind: PostingsKind): DataFrame = {
     require(inDir != outDir,
       "deletion rewrites a NEW store version — outDir must differ from inDir")
-    val (postings, dl) = loadBm25Index(spark, inDir)
-    require(postings.columns.contains("dl"),
-      s"postings store at $inDir lacks the denormalized dl column — " +
-        "rebuild it with saveBm25Index before deleting (legacy layout)")
+    val (postings, dl) = loadStore(spark, inDir, kind)
     val hit = coalesce(pred, lit(false))
     val (survDl, audit) = graft.streaming.Maintenance.deleteWhere(
-      dl.withColumn("store", lit("bm25")), pred, Seq("store"), col("doc_id"))
+      dl.withColumn("store", lit(kind.auditStore)), pred, Seq("store"), col("doc_id"))
     // survivor postings rewrite and the doclen → stats chain are
     // independent reads of the (immutable) v1 store — overlapped
     // (guide §2.6). The rewrite is SHUFFLE-FREE: the v1 store is already
     // tok_bucket-partitioned with tok-sorted files, and a row filter
     // preserves both, so survivors keep their stored bucket column and
     // only re-sort locally (a task that concatenated several input files
-    // must restore the per-file order) — the previous form re-shuffled
-    // the entire surviving corpus through repartition(tok_bucket, tok)
-    // to recompute a layout it already had.
+    // must restore the per-file order).
     Par.run(
       () => postings.filter(!hit)
-        .select(col("doc_id"), col("tok"), col("tf"), col("dl"),
-          col("tok_bucket"))
         .sortWithinPartitions(col("tok_bucket"), col("tok"))
         .write.mode("overwrite").partitionBy("tok_bucket")
-        .parquet(s"$outDir/postings"),
-      () => {
-        survDl.drop("store").write.mode("overwrite").parquet(s"$outDir/doclen")
-        // survivor corpus stats re-derive from the new version's own doclen
-        val (nDocs, aTokens) = corpusStatsPair(
-          spark.read.schema(doclenSchema).parquet(s"$outDir/doclen"))
-        writeStatsRow(spark, s"$outDir/stats", nDocs, aTokens, accrete = false)
-      })
+        .parquet(s"$outDir/${kind.dirName}"),
+      () => writeDoclenAndStats(spark, outDir, survDl.drop("store"), append = false))
     audit
   }
 
-  /** [[deleteFromBm25Index]] for the POSITIONAL phrase store: documents
-    * matching `pred` are removed from both the positional postings and
-    * the shared doclen table, survivors rewrite as a new store version
-    * at `outDir` (same version-swap rule), and the returned one-row
-    * tombstone audit carries n_deleted / n_kept / the Σ (h60(doc_id)
-    * mod 1000003) erasure fingerprint. Positions are per-document state
-    * and df/N/avg-dl re-derive at serve time, so phrase serving the
-    * survivor store ≡ serving a from-scratch positional index of the
-    * surviving corpus (oracle-proven hash-exact in q_phrase_delete).
-    * Survivor postings rewrite through the same bucket/sort layout as
-    * [[saveBm25Positional]], so term-bucket pruning carries over.
-    */
-  def deleteFromBm25Positional(
-      spark: org.apache.spark.sql.SparkSession,
-      inDir: String,
-      outDir: String,
-      pred: Column): DataFrame = {
-    require(inDir != outDir,
-      "deletion rewrites a NEW store version — outDir must differ from inDir")
-    val (postingsPos, dl) = loadBm25Positional(spark, inDir)
-    require(postingsPos.columns.contains("dl"),
-      s"positional store at $inDir lacks the denormalized dl column — " +
-        "rebuild it with saveBm25Positional before deleting (legacy layout)")
-    val hit = coalesce(pred, lit(false))
-    val (survDl, audit) = graft.streaming.Maintenance.deleteWhere(
-      dl.withColumn("store", lit("bm25_pos")), pred, Seq("store"), col("doc_id"))
-    // overlapped and shuffle-free as in [[deleteFromBm25Index]]
-    Par.run(
-      () => postingsPos.filter(!hit)
-        .select(col("doc_id"), col("tok"), col("tf"), col("ps"), col("dl"),
-          col("tok_bucket"))
-        .sortWithinPartitions(col("tok_bucket"), col("tok"))
-        .write.mode("overwrite").partitionBy("tok_bucket")
-        .parquet(s"$outDir/postings_pos"),
-      () => {
-        survDl.drop("store").write.mode("overwrite").parquet(s"$outDir/doclen")
-        val (nDocs, aTokens) = corpusStatsPair(
-          spark.read.schema(doclenSchema).parquet(s"$outDir/doclen"))
-        writeStatsRow(spark, s"$outDir/stats", nDocs, aTokens, accrete = false)
-      })
-    audit
-  }
-
-  /** [[bm25TopK]] served from a prebuilt/reloaded index instead of the
-    * raw corpus: identical integer weighting, identical output (the
-    * round-trip spec asserts row equality), but the corpus explode is
-    * replaced by a pushed-down `tok IN terms` filter on the postings
-    * scan — only matching postings are read, nothing re-tokenizes. On a
-    * [[saveBm25Index]]-bucketed store the terms' `tok_bucket`s (derived
-    * driver-side, h60Jvm ≡ h60) go down as a static PARTITION filter
-    * first, so the scan lists only the probed buckets' directories —
-    * the lexical twin of the ANN stores' probed-cell pruning.
+  /** [[bm25TopK]] served from a stored index instead of the raw corpus:
+    * identical integer weighting, identical output (the round-trip spec
+    * asserts row equality), but the corpus explode is replaced by the
+    * [[probeTerms]] scan — only the terms' buckets and postings are
+    * read, `dl` rides the posting rows, nothing re-tokenizes.
     */
   def bm25TopKFromIndex(
       postings: DataFrame, doclen: DataFrame, terms: Seq[String], k: Int,
@@ -1893,29 +1788,32 @@ object TextAnalysis {
     require(terms.nonEmpty, "terms must be non-empty")
     require(k > 0, "k must be positive")
     // corpus statistics: one stored row when the sidecar is supplied;
-    // otherwise the legacy doclen aggregation (a corpus-table scan per
-    // query — fine at test scale, the sidecar is the 100 TB path)
+    // otherwise the doclen aggregation (a corpus-table scan per query —
+    // the torn/empty-sidecar fallback, the sidecar is the 100 TB path)
     val statsF = stats.map(scalarStats).getOrElse(corpusStats(doclen))
-    val hasDl = postings.columns.contains("dl")
-    val cols = Seq(col("doc_id"), col("tok"), col("tf")) ++
-      (if (hasDl) Seq(col("dl")) else Nil)
-    val tf =
-      if (postings.columns.contains("tok_bucket")) {
-        val buckets = terms.map(t => h60Jvm(t) % Bm25Buckets).distinct
-        postings
-          .filter(col("tok_bucket").isin(buckets: _*) && col("tok").isin(terms: _*))
-          .select(cols: _*)
-      } else postings.filter(col("tok").isin(terms: _*)).select(cols: _*)
+    val tf = probeTerms(postings, terms, "doc_id", "tok", "tf", "dl")
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    // dl rides the posting rows on a denormalized store — no doclen join
-    (if (hasDl) tf else tf.join(doclen, Seq("doc_id")))
-      .join(broadcast(dfreq), Seq("tok"))
+    tf.join(broadcast(dfreq), Seq("tok"))
       .crossJoin(broadcast(statsF))
       .select(col("doc_id"), bm25Weight.as("w"))
       .groupBy(col("doc_id"))
       .agg(sum(col("w")).as("score"), count(lit(1)).as("n_hit"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
+  }
+
+  /** The stored postings rows of `terms`, projected to `cols`: the terms'
+    * `tok_bucket`s (derived driver-side, h60Jvm ≡ h60) go down as a
+    * static PARTITION filter, so the scan lists only the probed buckets'
+    * directories — the lexical twin of the ANN stores' probed-cell
+    * pruning — and the residual `tok IN` skips row groups off the
+    * tok-sorted files' min/max stats.
+    */
+  private def probeTerms(postings: DataFrame, terms: Seq[String], cols: String*): DataFrame = {
+    val buckets = terms.map(t => h60Jvm(t) % Bm25Buckets).distinct
+    postings
+      .filter(col("tok_bucket").isin(buckets: _*) && col("tok").isin(terms: _*))
+      .select(cols.map(col): _*)
   }
 
   /** The per-posting integer BM25 weight (see [[bm25TopK]] scaladoc for
@@ -2027,10 +1925,8 @@ object TextAnalysis {
     * (decontamination-by-retrieval over a 100-TB corpus never
     * re-tokenizes it per query batch). The query suite is eval-sized by
     * the same contract that broadcasts it in the corpus form, so its
-    * distinct terms collect driver-side and push down exactly like the
-    * single-query serve: term buckets as a static partition filter on a
-    * bucketed store, the residual `tok IN` against tok-sorted row
-    * groups. Identical ranking to the corpus form by construction
+    * distinct terms collect driver-side and push down through the same
+    * [[probeTerms]] scan as the single-query serve. Identical ranking to the corpus form by construction
     * (same tf/df/dl values, same integer weight, same salted top-k).
     */
   def bm25PerQueryFromIndex(
@@ -2047,26 +1943,14 @@ object TextAnalysis {
       else posting.distinct().withColumn("qtf", lit(1L)))
     val termSeq = qt.select(col("tok")).distinct()
       .collect().map(_.getString(0)).toSeq
-    val hasDl = postings.columns.contains("dl")
     // doclen is corpus-row-sized: pin (an eager materialization) ONLY
-    // when the serve will actually read it — a dl-denormalized store
-    // with the stats sidecar never does
-    val needDl = !hasDl || stats.isEmpty
-    val dl = if (needDl) Pins.pin(doclen.select(col("doc_id"), col("dl")))
+    // when the serve will actually read it — never with the stats sidecar
+    val dl = if (stats.isEmpty) Pins.pin(doclen.select(col("doc_id"), col("dl")))
       else doclen
-    val cols = Seq(col("doc_id"), col("tok"), col("tf")) ++
-      (if (hasDl) Seq(col("dl")) else Nil)
-    val tf = Pins.pin(
-      if (postings.columns.contains("tok_bucket")) {
-        val buckets = termSeq.map(t => h60Jvm(t) % Bm25Buckets).distinct
-        postings
-          .filter(col("tok_bucket").isin(buckets: _*) &&
-            col("tok").isin(termSeq: _*))
-          .select(cols: _*)
-      } else postings.filter(col("tok").isin(termSeq: _*)).select(cols: _*))
+    val tf = Pins.pin(probeTerms(postings, termSeq, "doc_id", "tok", "tf", "dl"))
     val out = scorePerQuery(tf, dl, qt, k, salts, stats)
     Pins.release(qt)
-    if (needDl) Pins.release(dl)
+    if (stats.isEmpty) Pins.release(dl)
     Pins.release(tf)
     out
   }

@@ -15,10 +15,7 @@ class RegistrySpec extends AnyFunSuite {
     * the artifact — Verify runs queries first, then dumps the oracles.
     * Anything NOT in this set must have a static oracle.
     */
-  private val stashBacked =
-    Set("q_pq_topk", "q_pq_codes", "q_pq_delete", "q_pq_retrain", "q_semdedup", "q_quality_classifier", "q_mutual_knn",
-      "q_cell_stats", "q_cell_outliers",
-      "q_hard_negatives", "q_cell_purity", "q_label_audit")
+  private val stashBacked = SparkEntry.learnedOracleQueries
 
   test("every query has an oracle (stash-backed ones after a run); no dangling oracles") {
     val q = SparkEntry.queries.keySet

@@ -1895,15 +1895,14 @@ class TextOpsSpec extends SparkSpec {
     val plan = servedDf.queryExecution.executedPlan.toString
     assert(plan.matches("(?s).*PartitionFilters: \\[[^\\]]*tok_bucket[^\\]]*\\].*"),
       s"term-bucket filter must reach the postings scan as a partition filter:\n$plan")
-    // the index is union-mergeable over disjoint doc batches: the
-    // concatenated per-batch indexes serve the identical top-k
-    val (p1, l1) = TextAnalysis.buildBm25Index(d.filter(col("doc_id") <= 2))
-    val (p2, l2) = TextAnalysis.buildBm25Index(d.filter(col("doc_id") > 2))
-    val merged = TextAnalysis.bm25TopKFromIndex(
-      p1.unionByName(p2), l1.unionByName(l2), Seq("x", "q"), k = 4)
+    // the store is union-mergeable over disjoint doc batches: two
+    // appends to one store serve the identical top-k
+    TextAnalysis.appendBm25Index(spark, s"$wd/merged", d.filter(col("doc_id") <= 2))
+    TextAnalysis.appendBm25Index(spark, s"$wd/merged", d.filter(col("doc_id") > 2))
+    val (pm, lm) = TextAnalysis.loadBm25Index(spark, s"$wd/merged")
+    val merged = TextAnalysis.bm25TopKFromIndex(pm, lm, Seq("x", "q"), k = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(merged === direct)
-    Seq(l1, l2).foreach(_.unpersist(blocking = false))
     // batch retrieval from the same store: identical per-query ranking to
     // the corpus form (unweighted AND qtf-weighted), term buckets pruned
     val qs = Seq((10L, Seq("x", "q")), (20L, Seq("y", "y", "p")))
@@ -2929,7 +2928,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   /** Minimal bucketed postings dir (tok_bucket partition, dl column) for
-    * the legacy-layout cases.
+    * the no-sidecar case.
     */
   private def bucketedWrite(dir: String, rows: Seq[(Long, String, Long, Long)]): Unit = {
     import graft.functions.TextFunctions.h60
@@ -2975,17 +2974,6 @@ class TextOpsSpec extends SparkSpec {
       stats = TextAnalysis.loadBm25Stats(spark, s"$wd/tornstats"))
     assert(viaDoclen.collect().toSeq
       === TextAnalysis.bm25TopK(allDocs, Seq("vector"), 5).collect().toSeq)
-  }
-
-  test("appendBm25Index rejects a store written under the flat (unbucketed) layout") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25flat").toString
-    Seq((1L, "alpha", 1L)).toDF("doc_id", "tok", "tf")
-      .write.parquet(s"$dir/postings")
-    Seq((1L, 1L)).toDF("doc_id", "dl").write.parquet(s"$dir/doclen")
-    val e = intercept[IllegalArgumentException] {
-      TextAnalysis.appendBm25Index(spark, dir, docs.limit(5))
-    }
-    assert(e.getMessage.contains("flat layout"))
   }
 
   test("one-shot similarity paths release every pin they take") {

@@ -8,12 +8,15 @@ parquet tables and compares (column-name-sorted, row-sorted) values
 against the parquet Verify dumped for that query. --skip names oracles
 to SKIP (reported, not failed) — for large-SF runs where a quadratic
 ground-truth oracle is prohibitive on the DuckDB side; each skip must
-be justified wherever the run is recorded.
+be justified wherever the run is recorded. A dumped <outdir>/<q>/
+directory with no oracle_sql.json entry fails as "output without
+oracle", so a missing learned oracle cannot pass unnoticed.
 """
 import argparse
 import duckdb
 import glob
 import json
+import os
 import sys
 import time
 
@@ -78,10 +81,17 @@ def main():
         except Exception as ex:
             print(f"ERR  {name}: {str(ex)[:300]}")
             fails += 1
+    orphans = 0
+    for d in sorted(glob.glob(f"{outdir}/*/")):
+        name = os.path.basename(os.path.normpath(d))
+        if name not in oracle:
+            print(f"FAIL {name}: output without oracle")
+            orphans += 1
     ran = len(oracle) - n_skipped
     skipnote = f", {n_skipped} skipped" if n_skipped else ""
-    print(f"== {ran - fails}/{ran} queries match{skipnote}")
-    sys.exit(1 if fails else 0)
+    orphannote = f", {orphans} outputs without oracle" if orphans else ""
+    print(f"== {ran - fails}/{ran} queries match{skipnote}{orphannote}")
+    sys.exit(1 if fails or orphans else 0)
 
 
 if __name__ == "__main__":
